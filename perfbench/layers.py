@@ -70,6 +70,13 @@ PER_LAYER: dict[str, tuple[str, str]] = {
     "operators.textstats.corpus_filter_s": ("s", "lower"),
     "trace.coverage": ("ratio", "higher"),
     "trace.overhead_s": ("s", "lower"),
+    # the process tree (JVM, Python workers, this process): CPU per call
+    # of the untraced measurement, peak resident memory of the traced
+    # one, which samples it. Per-layer, not end-to-end: they follow the
+    # JVM's JIT and GC activity and the host's load more than the
+    # package's work (see BENCHMARK.md)
+    "process_tree.cpu_s": ("s", "lower"),
+    "process_tree.peak_rss_mb": ("MB", "lower"),
 }
 for _kind in KINDS:
     PER_LAYER[f"formats.{_kind}.ms_p50"] = ("ms", "lower")

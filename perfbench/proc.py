@@ -94,6 +94,15 @@ class RssSampler:
         self._thread.join()
 
 
+def steal_ticks() -> tuple[int, int]:
+    """(stolen, total) CPU ticks of the host's CPUs since boot: the share
+    stolen is the time a virtual CPU was ready but the hypervisor ran
+    someone else, which slows every figure of a run alike."""
+    with open("/proc/stat") as f:
+        ticks = [int(x) for x in f.readline().split()[1:]]
+    return ticks[7], sum(ticks)
+
+
 def reap_all(timeout: float = 60.0) -> None:
     """Wait until every descendant has exited; terminate, then kill, what
     is left when the timeout runs out."""

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import base64
+import contextlib
 import itertools
 import json
 import os
@@ -35,7 +36,7 @@ T_START = time.perf_counter()
 ROOT = os.getcwd()
 HERE = os.path.dirname(os.path.abspath(__file__))
 N_SETUPS = 3  # setup_s is the median of this many session builds + warm-ups
-MIN_CALLS = 3  # kept calls per measurement, after the first call
+MIN_CALLS = 3  # kept calls per measurement, after the warm-up calls
 DESC = "perfbench:{}"
 
 
@@ -185,24 +186,25 @@ def session_fingerprint(spark) -> dict:
 # -- measurement -----------------------------------------------------------------
 
 
-def measure(spark, workload, seconds: float, desc: str) -> dict:
-    """One first call, then repeat the workload's measured call until
-    `seconds` of it are measured and at least MIN_CALLS calls are made.
-    Every call's output is checked; the first call's figures are not kept,
-    because it pays one-off costs (JIT of the workload's plans, first reads
-    of the table). Per kept call: wall time and process-tree CPU; over the
-    kept calls: the peak RSS of the process tree."""
+def measure(spark, workload, seconds: float, desc: str, sample_rss: bool = False) -> dict:
+    """The workload's warm-up calls, then repeat the workload's measured call
+    until `seconds` of it are measured and at least MIN_CALLS calls are
+    made. Every call's output is checked; the warm-up calls' figures are
+    not kept. Per kept call: wall time and process-tree CPU; over the
+    kept calls, with sample_rss: the peak RSS of the process tree. The
+    sampler walks /proc in this process 20 times a second, so only the
+    traced run uses it."""
     from proc import RssSampler, cpu_seconds
 
-    walls, cpus, timings = [], [], []
+    warm, walls, cpus, timings = [], [], [], []
     attempted = failed = 0
-    with RssSampler() as rss:
+    with RssSampler() if sample_rss else contextlib.nullcontext() as rss:
         for i in itertools.count():
-            # the first call runs under its own job description, so the
+            # warm-up calls run under their own job description, so the
             # event log's figures for `desc` cover the kept calls only
-            call_desc = desc if i else DESC.format("first-call")
+            call_desc = desc if i >= workload.warm_calls else DESC.format("warm-up-call")
             spark.sparkContext.setJobDescription(call_desc)
-            if i == 1:
+            if i == workload.warm_calls and rss:
                 rss.reset()
             c0 = cpu_seconds()
             t0 = time.perf_counter()
@@ -212,16 +214,20 @@ def measure(spark, workload, seconds: float, desc: str) -> dict:
             a, f = workload.check(spark, result)
             attempted += a
             failed += f
-            if i == 0:
-                first = wall
+            if i < workload.warm_calls:
+                warm.append(wall)
                 continue
             walls.append(wall)
             cpus.append(cpu)
             timings.append(result.get("timings", {}))
             if len(walls) >= MIN_CALLS and sum(walls) >= seconds:
                 break
-        peak = rss.peak
-    _log(f"{desc}: first call {first:.2f} s, then " + ", ".join(f"{w:.2f}" for w in walls) + " s")
+        peak = rss.peak if rss else None
+    _log(
+        f"{desc}: warm-up calls " + ", ".join(f"{w:.2f}" for w in warm)
+        + " s, then " + ", ".join(f"{w:.2f}" for w in walls)
+        + " s (CPU " + ", ".join(f"{c:.2f}" for c in cpus) + " s)"
+    )
     return {
         "walls": walls,
         "cpus": cpus,
@@ -240,8 +246,6 @@ def end_to_end(workload, setup_s: float, m: dict) -> dict:
         "turns_per_s": (workload.rows / wall, "turns/s"),
         "docs_per_s": (workload.docs / wall, "docs/s"),
         "payload_mb_per_s": (workload.payload_bytes / 1e6 / wall, "MB/s"),
-        "cpu_s": (_median(m["cpus"]), "s"),
-        "peak_rss_mb": (m["peak_rss_mb"], "MB"),
     }
     return {k: {"value": v, "unit": u} for k, (v, u) in values.items()}
 
@@ -270,7 +274,7 @@ def trace(workload, args, work: str, fingerprint: dict) -> tuple[dict, int, int]
             "spark.eventLog.compress": "false",
         }
     )
-    traced = measure(spark, workload, args.seconds, DESC.format("measure"))
+    traced = measure(spark, workload, args.seconds, DESC.format("measure"), sample_rss=True)
     metrics.update(workload.trace_extras(spark, traced))
     attempted = untraced["attempted"] + traced["attempted"]
     failed = untraced["failed"] + traced["failed"]
@@ -297,6 +301,8 @@ def trace(workload, args, work: str, fingerprint: dict) -> tuple[dict, int, int]
     job_s = sum(v["job_s"] for v in measured)
     metrics["trace.coverage"] = job_s / sum(traced["walls"])
     metrics["trace.overhead_s"] = _median(traced["walls"]) - _median(untraced["walls"])
+    metrics["process_tree.cpu_s"] = _median(untraced["cpus"])
+    metrics["process_tree.peak_rss_mb"] = traced["peak_rss_mb"]
     # the traced session is built on the running JVM, like the setups
     # setup_s takes its median from; the first build also starts the JVM
     metrics["plans.session.build_s"] = build_s
@@ -320,8 +326,9 @@ def main() -> None:
     os.makedirs(work)
     sys.path[:0] = [ROOT, HERE]
     _prepare_env(work)
-    from proc import reap_all
+    from proc import reap_all, steal_ticks
 
+    steal0 = steal_ticks()
     try:
         import workloads
 
@@ -352,6 +359,8 @@ def main() -> None:
         parent = os.path.dirname(work)
         if os.path.isdir(parent) and not os.listdir(parent):
             os.rmdir(parent)
+    stolen, total = (b - a for a, b in zip(steal0, steal_ticks()))
+    fingerprint["host"]["cpu_steal_frac"] = round(stolen / max(total, 1), 4)
     print(json.dumps({"fingerprint": fingerprint}, sort_keys=True))
     correct = failed == 0
     print(

@@ -84,6 +84,10 @@ class Workload:
     traced run."""
 
     name = ""
+    # calls made before measuring: the first pays one-off costs (first
+    # reads of the table, code generation), and the JVM keeps compiling
+    # the plans' hot code for a few calls more before its figures settle
+    warm_calls = 2
     trace_sides: tuple[str, ...] = ()  # workloads run once in the traced run
     distinct_docs = ()  # (kind, payload) for the in-process passes
     table = None  # the transcript table as pandas, for the in-process passes
@@ -190,6 +194,11 @@ class ForwardedWrite(Extraction):
     the output read back."""
 
     name = "forwarded_write"
+    # five Spark jobs per call, each with its own planning: the JVM's JIT
+    # compiler works through the first five calls or so (wall time per
+    # call falls by a fifth over them, CPU per call by half) before the
+    # per-call figures settle
+    warm_calls = 5
 
     def __init__(self, seed: int, input_dir: str):
         super().__init__(seed, input_dir)
