@@ -390,6 +390,24 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+# Checkpoint-table columns, in order. The row is built from Catalyst
+# literals, so its append is a one-task write that runs in the JVM only;
+# createDataFrame(<list>) would ship it through a pickled Python RDD job.
+# Literals are non-null, so these files mark the columns required in their
+# parquet footers; Spark reads every column of the table back nullable.
+_CHECKPOINT_COLUMNS = (
+    ("run_id", "string"),
+    ("partition_id", "int"),
+    ("conv_bucket", "int"),
+    ("n_groups", "int"),
+    ("state", "string"),
+    ("docs_parsed", "bigint"),
+    ("records_decoded", "bigint"),
+    ("failures", "bigint"),
+    ("ts", "bigint"),
+)
+
+
 def run_with_checkpoints(
     spark: SparkSession,
     transcripts_path: str,
@@ -398,9 +416,11 @@ def run_with_checkpoints(
     n_groups: int = 8,
     fail_after_groups: int | None = None,
 ) -> dict:
-    """Process the corpus in deterministic hash-bucket groups; each group is
-    one Spark job committed with an idempotent overwrite + a checkpoint row.
-    Re-running with the same run_id skips completed groups (FIXTURES.md §5).
+    """Process the corpus in deterministic hash-bucket groups. Each group
+    costs two jobs: its extraction write (an idempotent overwrite of
+    group=<g>) and, after that commit, a one-row JVM-only append to the
+    `_checkpoints` table. Re-running with the same run_id and n_groups
+    skips completed groups (FIXTURES.md §5).
 
     Group selection must PRUNE, not rescan: a predicate on
     pmod(xxhash64(conv_id)) cannot push into a parquet scan, so n_groups
@@ -419,22 +439,24 @@ def run_with_checkpoints(
 
     ckpt_path = os.path.join(out_dir, "_checkpoints")
     done: set[int] = set()
-    try:
+    if _fs_exists(spark, ckpt_path):
+        # An unreadable checkpoint table raises: silently re-running every
+        # group would hide it.
         ckpt = spark.read.parquet(ckpt_path)
         # group numbers are only meaningful under the SAME n_groups: resuming
         # run_id with a different group count must re-run everything (the
         # staging dir is likewise keyed by n_groups), otherwise rows hashed
-        # into a "done-numbered" group of the new partitioning are skipped
-        done = {
-            r["partition_id"]
-            for r in ckpt.where(
-                (F.col("run_id") == run_id)
-                & (F.col("state") == "done")
-                & (F.col("n_groups") == n_groups)
-            ).collect()
-        }
-    except Exception:
-        pass  # first run: no checkpoint table yet (or pre-n_groups schema)
+        # into a "done-numbered" group of the new partitioning are skipped.
+        # A table written before the n_groups column existed resumes nothing.
+        if "n_groups" in ckpt.columns:
+            done = {
+                r["partition_id"]
+                for r in ckpt.where(
+                    (F.col("run_id") == run_id)
+                    & (F.col("state") == "done")
+                    & (F.col("n_groups") == n_groups)
+                ).collect()
+            }
 
     group_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
     # The staging directory is keyed by n_groups: resuming with a different
@@ -480,37 +502,31 @@ def run_with_checkpoints(
         # lineage + metrics row; append is safe because resume filters on
         # (run_id, state, partition_id) and group commits are idempotent
         agg = obs.get
-        row = [
-            (
-                run_id,
-                group,
-                group,
-                n_groups,
-                "done",
-                int(agg["docs_parsed"] or 0),
-                int(agg["records_decoded"] or 0),
-                int(agg["failures"] or 0),
-                int(time.time() * 1000),
-            )
-        ]
-        spark.createDataFrame(
-            row,
-            "run_id string, partition_id int, conv_bucket int, n_groups int, "
-            "state string, docs_parsed long, records_decoded long, "
-            "failures long, ts long",
-        ).coalesce(1).write.mode("append").parquet(ckpt_path)
+        values = (
+            run_id,
+            group,
+            group,
+            n_groups,
+            "done",
+            int(agg["docs_parsed"] or 0),
+            int(agg["records_decoded"] or 0),
+            int(agg["failures"] or 0),
+            int(time.time() * 1000),
+        )
+        spark.range(0, 1, 1, 1).select(
+            *[
+                F.lit(v).cast(t).alias(name)
+                for (name, t), v in zip(_CHECKPOINT_COLUMNS, values)
+            ]
+        ).write.mode("append").parquet(ckpt_path)
         processed += 1
         stats["groups_run"] += 1
     return stats
 
 
 def read_extracted(spark: SparkSession, out_dir: str, n_groups: int = 8) -> DataFrame:
-    paths = [
-        os.path.join(out_dir, f"group={g}")
-        for g in range(n_groups)
-        if os.path.isdir(os.path.join(out_dir, f"group={g}"))
-    ]
-    return spark.read.parquet(*paths)
+    paths = [os.path.join(out_dir, f"group={g}") for g in range(n_groups)]
+    return spark.read.parquet(*[p for p in paths if _fs_exists(spark, p)])
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

@@ -5,7 +5,9 @@ equals an uninterrupted run (FIXTURES.md §6.3)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from b2xtranslator_spark.pipeline import (
     read_extracted,
@@ -17,6 +19,13 @@ from b2xtranslator_spark.sources.transcripts import (
 )
 
 N_GROUPS = 4
+
+# The checkpoint table as it has always been written (createDataFrame with
+# this DDL): resume must keep reading tables that hold such rows.
+CHECKPOINT_DDL = (
+    "run_id string, partition_id int, conv_bucket int, n_groups int, "
+    "state string, docs_parsed long, records_decoded long, failures long, ts long"
+)
 
 
 @pytest.fixture(scope="module")
@@ -150,3 +159,84 @@ def test_resume_with_different_n_groups_reruns_everything(
     # and the original partitioning still resumes as fully done
     s3 = run_with_checkpoints(spark, transcripts_path, out, run_id="rg", n_groups=2)
     assert s3 == {"groups_run": 0, "groups_skipped": 2}
+
+
+def test_checkpoint_table_columns_and_types(spark, transcripts_path, tmp_path_factory):
+    """The checkpoint table read back keeps its column names, order, types
+    and nullability, and holds one row per committed group."""
+    out = str(tmp_path_factory.mktemp("out_schema"))
+    run_with_checkpoints(spark, transcripts_path, out, run_id="rs", n_groups=2)
+    ckpt = spark.read.parquet(f"{out}/_checkpoints")
+    assert ckpt.schema == StructType.fromDDL(CHECKPOINT_DDL)
+    rows = sorted(ckpt.collect(), key=lambda r: r["partition_id"])
+    assert [(r["run_id"], r["partition_id"], r["conv_bucket"]) for r in rows] == [
+        ("rs", 0, 0),
+        ("rs", 1, 1),
+    ]
+    assert all(r["n_groups"] == 2 and r["state"] == "done" for r in rows)
+    assert all(r["ts"] > 0 and r["failures"] >= 0 for r in rows)
+
+
+def test_resume_over_createdataframe_checkpoint_row(
+    spark, transcripts_path, tmp_path_factory
+):
+    """A table that already holds a row written through createDataFrame with
+    the checkpoint DDL resumes: that group is skipped, the rest run, and the
+    mixed table then reads as fully done."""
+    out = str(tmp_path_factory.mktemp("out_legacy_row"))
+    spark.createDataFrame(
+        [("rl", 0, 0, 2, "done", 1, 1, 0, 1)], CHECKPOINT_DDL
+    ).coalesce(1).write.mode("append").parquet(f"{out}/_checkpoints")
+    s1 = run_with_checkpoints(spark, transcripts_path, out, run_id="rl", n_groups=2)
+    assert s1 == {"groups_run": 1, "groups_skipped": 1}
+    ckpt = spark.read.parquet(f"{out}/_checkpoints")
+    assert ckpt.schema == StructType.fromDDL(CHECKPOINT_DDL)
+    assert sorted(r["partition_id"] for r in ckpt.collect()) == [0, 1]
+    s2 = run_with_checkpoints(spark, transcripts_path, out, run_id="rl", n_groups=2)
+    assert s2 == {"groups_run": 0, "groups_skipped": 2}
+
+
+def test_checkpoint_append_stays_in_the_jvm(
+    spark, transcripts_path, tmp_path_factory, monkeypatch
+):
+    """The checkpoint row is built from Catalyst literals, never from a
+    driver-side Python list: a run completes with createDataFrame unusable."""
+
+    def no_python_rows(*args, **kwargs):
+        raise AssertionError("checkpoint row shipped through createDataFrame")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rows)
+    out = str(tmp_path_factory.mktemp("out_jvm_row"))
+    stats = run_with_checkpoints(spark, transcripts_path, out, run_id="rj", n_groups=2)
+    assert stats == {"groups_run": 2, "groups_skipped": 0}
+    assert spark.read.parquet(f"{out}/_checkpoints").count() == 2
+
+
+def test_corrupt_checkpoint_file_raises(spark, transcripts_path, tmp_path_factory):
+    """An unreadable checkpoint table is an error, not a fresh start: resume
+    must not silently re-run every group over it."""
+    import glob
+
+    from py4j.protocol import Py4JJavaError
+
+    out = str(tmp_path_factory.mktemp("out_corrupt"))
+    run_with_checkpoints(spark, transcripts_path, out, run_id="rc", n_groups=2)
+    files = glob.glob(f"{out}/_checkpoints/*.parquet")
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        run_with_checkpoints(spark, transcripts_path, out, run_id="rc", n_groups=2)
+
+
+def test_read_extracted_on_file_uri(spark, transcripts_path, tmp_path_factory):
+    """out_dir given as a file:// URI (as for hdfs:// or s3a://): the group
+    directories are found through the Hadoop FileSystem, not os.path."""
+    out = str(tmp_path_factory.mktemp("out_uri"))
+    uri = f"file://{out}"
+    stats = run_with_checkpoints(spark, transcripts_path, uri, run_id="ru", n_groups=2)
+    assert stats == {"groups_run": 2, "groups_skipped": 0}
+    got = read_extracted(spark, uri, 2)
+    assert got.count() == spark.read.parquet(transcripts_path).count()
+    assert _canonical(got).equals(_canonical(read_extracted(spark, out, 2)))
