@@ -3,11 +3,12 @@
 Architecture (SURVEY.md §3 "Spark lifecycle"):
 
     read transcripts (column-pruned)
-      -> salt & repartition by conv_id        (skew defense: oversized
+      -> mapInPandas(extract_turns)           (Arrow batches over the scan
+                                               partitions; pure per-document
+                                               map; no shuffle)
+      -> salt & repartition by conv_bucket    (skew defense: oversized
                                                attachment conversations split
-                                               across tasks)
-      -> mapInPandas(extract_turns)           (Arrow batches; pure per-
-                                               document map; no shuffle)
+                                               across reducers)
       -> write partitioned by conv_bucket,
          sorted within partitions by (conv_id, turn_idx)
 
@@ -25,6 +26,7 @@ from __future__ import annotations
 import base64
 import os
 import time
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -306,47 +308,17 @@ def _extract_frames(slices, np) -> Iterator[pd.DataFrame]:
         )
 
 
-def run_extraction(
-    transcripts: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int = 4,
-    mode: str = "none",
-) -> DataFrame:
-    """Arrow-batched extraction with a configurable pre-map layout.
-
-    mode="none" (default): map directly over the scan partitions — ZERO
-    shuffle. The payload column is the bulk of the data, so not moving it
-    before a pure per-document map is the single biggest overhead saving
-    (measured 32% wall at 8 cores vs the salted shuffle); input split sizing
-    (spark.sql.files.maxPartitionBytes=32MB) controls balance instead. Skew
-    defense lives where skew actually bites — the WRITE shuffle
-    (write_extracted salts its partitioning key).
-
-    mode="salted": pre-shuffle on (conv_id, salt(turn_idx)) — conversations
-    stay mostly co-located while a 1000-turn conversation of 10MB
-    attachments splits across `salt_buckets` tasks. Use when a downstream
-    stage consumes the mapped output grouped by conversation directly.
-
-    mode="balanced": round-robin into fine partitions — best task balance
-    when the input file layout itself is skewed.
-
-    Partition count defaults to cores x 8: doc-size variance (4KB..10MB) is
-    high, so fine partitions + AQE coalescing beat coarse ones (measured 2.8x
-    on the sample corpus)."""
-    spark = transcripts.sparkSession
-    pruned = transcripts.select("conv_id", "turn_idx", "text", "tool")
-    n = num_partitions or spark.sparkContext.defaultParallelism * 8
-    if mode == "none":
-        shaped = pruned
-    elif mode == "balanced":
-        shaped = pruned.repartition(n)
-    else:
-        shaped = pruned.repartition(
-            n,
-            F.col("conv_id"),
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)),
-        )
-    return shaped.mapInPandas(extract_turns, schema=EXTRACTED_SCHEMA)
+def run_extraction(transcripts: DataFrame) -> DataFrame:
+    """Arrow-batched extraction mapped directly over the scan partitions:
+    ZERO shuffle. The payload column is the bulk of the data, so not moving
+    it before a pure per-document map is the single biggest overhead saving
+    (measured 32% wall at 8 cores vs a salted pre-shuffle); input split
+    sizing (spark.sql.files.maxPartitionBytes=32MB) controls balance
+    instead. Skew defense lives where skew actually bites — the WRITE
+    shuffle (write_extracted salts its partitioning key)."""
+    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
+        extract_turns, schema=EXTRACTED_SCHEMA
+    )
 
 
 def write_extracted(
@@ -381,20 +353,22 @@ def write_extracted(
 # -- checkpointed run (resume without recompute) --------------------------------
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path` through Hadoop, so local, hdfs:// and
+    s3a:// locations are handled alike."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through Hadoop's FileSystem so it answers correctly
     for hdfs:// and s3a:// URIs, not only the local filesystem."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, path)
     return bool(fs.exists(hpath))
 
 
-# Checkpoint-table columns, in order. The row is built from Catalyst
-# literals, so its append is a one-task write that runs in the JVM only;
-# createDataFrame(<list>) would ship it through a pickled Python RDD job.
-# Literals are non-null, so these files mark the columns required in their
-# parquet footers; Spark reads every column of the table back nullable.
+# Checkpoint-table columns, in order, with their Spark types. The files
+# hold them as parquet string / int32 / int64.
 _CHECKPOINT_COLUMNS = (
     ("run_id", "string"),
     ("partition_id", "int"),
@@ -406,6 +380,37 @@ _CHECKPOINT_COLUMNS = (
     ("failures", "bigint"),
     ("ts", "bigint"),
 )
+_CHECKPOINT_DDL = ", ".join(f"{name} {t}" for name, t in _CHECKPOINT_COLUMNS)
+
+
+def _commit_checkpoint_row(spark: SparkSession, ckpt_path: str, values: tuple) -> None:
+    """Add one row to the checkpoint table without a Spark job: the row is
+    serialized to parquet on the driver and committed through the Hadoop
+    FileSystem. The bytes land under a `_`-prefixed name, which Spark's
+    readers skip, and are then renamed into place, so a crash before the
+    rename leaves no visible row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow_types = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64()}
+    row = pa.table(
+        {
+            name: pa.array([v], arrow_types[t])
+            for (name, t), v in zip(_CHECKPOINT_COLUMNS, values)
+        }
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(row, sink)
+    name = uuid.uuid4().hex
+    fs, tmp = _hadoop_path(spark, os.path.join(ckpt_path, f"_tmp-{name}.parquet"))
+    _, final = _hadoop_path(spark, os.path.join(ckpt_path, f"part-{name}.parquet"))
+    out = fs.create(tmp, False)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"checkpoint commit: rename {tmp} -> {final} failed")
 
 
 def run_with_checkpoints(
@@ -417,10 +422,10 @@ def run_with_checkpoints(
     fail_after_groups: int | None = None,
 ) -> dict:
     """Process the corpus in deterministic hash-bucket groups. Each group
-    costs two jobs: its extraction write (an idempotent overwrite of
-    group=<g>) and, after that commit, a one-row JVM-only append to the
-    `_checkpoints` table. Re-running with the same run_id and n_groups
-    skips completed groups (FIXTURES.md §5).
+    costs one Spark job, its extraction write (an idempotent overwrite of
+    group=<g>); after that commit, one row is added to the `_checkpoints`
+    table by a FileSystem create and rename, with no job. Re-running with
+    the same run_id and n_groups skips completed groups (FIXTURES.md §5).
 
     Group selection must PRUNE, not rescan: a predicate on
     pmod(xxhash64(conv_id)) cannot push into a parquet scan, so n_groups
@@ -440,23 +445,25 @@ def run_with_checkpoints(
     ckpt_path = os.path.join(out_dir, "_checkpoints")
     done: set[int] = set()
     if _fs_exists(spark, ckpt_path):
-        # An unreadable checkpoint table raises: silently re-running every
-        # group would hide it.
-        ckpt = spark.read.parquet(ckpt_path)
+        # Read with the known schema: no inference job, and a table holding
+        # only an uncommitted `_tmp-*` file reads as empty. An unreadable
+        # checkpoint file raises: silently re-running every group would
+        # hide it.
+        ckpt = spark.read.schema(_CHECKPOINT_DDL).parquet(ckpt_path)
         # group numbers are only meaningful under the SAME n_groups: resuming
         # run_id with a different group count must re-run everything (the
         # staging dir is likewise keyed by n_groups), otherwise rows hashed
         # into a "done-numbered" group of the new partitioning are skipped.
-        # A table written before the n_groups column existed resumes nothing.
-        if "n_groups" in ckpt.columns:
-            done = {
-                r["partition_id"]
-                for r in ckpt.where(
-                    (F.col("run_id") == run_id)
-                    & (F.col("state") == "done")
-                    & (F.col("n_groups") == n_groups)
-                ).collect()
-            }
+        # Rows written before the n_groups column existed read it as NULL
+        # and resume nothing.
+        done = {
+            r["partition_id"]
+            for r in ckpt.where(
+                (F.col("run_id") == run_id)
+                & (F.col("state") == "done")
+                & (F.col("n_groups") == n_groups)
+            ).collect()
+        }
 
     group_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
     # The staging directory is keyed by n_groups: resuming with a different
@@ -465,15 +472,13 @@ def run_with_checkpoints(
     # Hadoop FileSystem API so the guard also holds on HDFS/S3 paths where
     # os.path.exists is always False and every run would re-scan the corpus.
     staged_path = os.path.join(out_dir, f"_staged_g{n_groups}")
-    if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
-        (
-            spark.read.parquet(transcripts_path)
-            .withColumn("grp", group_col)
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(staged_path)
-        )
-    staged = spark.read.parquet(staged_path)
+    if _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
+        # committed by an earlier run: infer, so resume needs no source
+        staged = spark.read.parquet(staged_path)
+    else:
+        src = spark.read.parquet(transcripts_path).withColumn("grp", group_col)
+        src.write.mode("overwrite").partitionBy("grp").parquet(staged_path)
+        staged = spark.read.schema(src.schema).parquet(staged_path)
 
     processed = 0
     stats = {"groups_run": 0, "groups_skipped": len(done)}
@@ -499,8 +504,9 @@ def run_with_checkpoints(
             .write.mode("overwrite")
             .parquet(group_out)
         )
-        # lineage + metrics row; append is safe because resume filters on
-        # (run_id, state, partition_id) and group commits are idempotent
+        # lineage + metrics row, only after the data commit; append is safe
+        # because resume filters on (run_id, state, partition_id) and group
+        # commits are idempotent
         agg = obs.get
         values = (
             run_id,
@@ -513,20 +519,20 @@ def run_with_checkpoints(
             int(agg["failures"] or 0),
             int(time.time() * 1000),
         )
-        spark.range(0, 1, 1, 1).select(
-            *[
-                F.lit(v).cast(t).alias(name)
-                for (name, t), v in zip(_CHECKPOINT_COLUMNS, values)
-            ]
-        ).write.mode("append").parquet(ckpt_path)
+        _commit_checkpoint_row(spark, ckpt_path, values)
         processed += 1
         stats["groups_run"] += 1
     return stats
 
 
 def read_extracted(spark: SparkSession, out_dir: str, n_groups: int = 8) -> DataFrame:
+    """The committed groups of a run_with_checkpoints output, read with
+    EXTRACTED_SCHEMA: building the frame runs no Spark job, and an output
+    with no committed group reads as an empty frame."""
     paths = [os.path.join(out_dir, f"group={g}") for g in range(n_groups)]
-    return spark.read.parquet(*[p for p in paths if _fs_exists(spark, p)])
+    return spark.read.schema(EXTRACTED_SCHEMA).parquet(
+        *[p for p in paths if _fs_exists(spark, p)]
+    )
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

@@ -4,12 +4,16 @@ equals an uninterrupted run (FIXTURES.md §6.3)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from b2xtranslator_spark.pipeline import (
+    EXTRACTED_SCHEMA,
     read_extracted,
     run_with_checkpoints,
 )
@@ -199,8 +203,9 @@ def test_resume_over_createdataframe_checkpoint_row(
 def test_checkpoint_append_stays_in_the_jvm(
     spark, transcripts_path, tmp_path_factory, monkeypatch
 ):
-    """The checkpoint row is built from Catalyst literals, never from a
-    driver-side Python list: a run completes with createDataFrame unusable."""
+    """The checkpoint row never goes through createDataFrame: it is written
+    as parquet bytes through the Hadoop FileSystem, so a run completes with
+    createDataFrame unusable."""
 
     def no_python_rows(*args, **kwargs):
         raise AssertionError("checkpoint row shipped through createDataFrame")
@@ -240,3 +245,94 @@ def test_read_extracted_on_file_uri(spark, transcripts_path, tmp_path_factory):
     got = read_extracted(spark, uri, 2)
     assert got.count() == spark.read.parquet(transcripts_path).count()
     assert _canonical(got).equals(_canonical(read_extracted(spark, out, 2)))
+
+
+def test_checkpointed_run_costs_one_job_per_group(
+    spark, transcripts_path, tmp_path_factory
+):
+    """A fresh run makes 2 + n_groups Spark jobs: the source's schema read,
+    the staging write and one extraction write per group. The staged table
+    is read back with the schema just written and the checkpoint rows are
+    committed through the FileSystem, so neither costs a job; building
+    read_extracted runs none either."""
+    sc = spark.sparkContext
+    group_id = "test-ckpt-job-count"
+    out = str(tmp_path_factory.mktemp("out_jobs"))
+
+    def jobs():
+        # job-start events reach the status store through the listener bus
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group_id))
+
+    sc.setJobGroup(group_id, "run_with_checkpoints job count")
+    try:
+        stats = run_with_checkpoints(
+            spark, transcripts_path, out, run_id="rn", n_groups=2
+        )
+        after_run = jobs()
+        got = read_extracted(spark, out, 2)
+        after_read = jobs()
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert stats == {"groups_run": 2, "groups_skipped": 0}
+    assert after_run == 2 + 2
+    assert after_read == after_run
+    assert got.schema == EXTRACTED_SCHEMA
+
+
+def test_uncommitted_checkpoint_file_is_ignored(
+    spark, transcripts_path, tmp_path_factory
+):
+    """A `_tmp-*` checkpoint file is a row whose create never reached its
+    rename (a crash mid-commit). Resume and spark.read.parquet skip it,
+    also when it is the only file in the table."""
+    out = str(tmp_path_factory.mktemp("out_tmp_row"))
+    ckpt = os.path.join(out, "_checkpoints")
+    os.makedirs(ckpt)
+    with open(os.path.join(ckpt, "_tmp-crashed0.parquet"), "wb") as fh:
+        fh.write(b"PAR1 truncated")
+    s1 = run_with_checkpoints(
+        spark, transcripts_path, out, run_id="rt", n_groups=2, fail_after_groups=1
+    )
+    assert s1 == {"groups_run": 1, "groups_skipped": 0, "killed": True}
+    with open(os.path.join(ckpt, "_tmp-crashed1.parquet"), "wb") as fh:
+        fh.write(b"PAR1 truncated")
+    s2 = run_with_checkpoints(spark, transcripts_path, out, run_id="rt", n_groups=2)
+    assert s2 == {"groups_run": 1, "groups_skipped": 1}
+    table = spark.read.parquet(ckpt)
+    assert table.schema == StructType.fromDDL(CHECKPOINT_DDL)
+    assert sorted(r["partition_id"] for r in table.collect()) == [0, 1]
+
+
+def test_resume_over_committed_staging_needs_no_source(
+    spark, transcripts_path, tmp_path_factory
+):
+    """A resume that finds the staging directory committed reads it back by
+    itself: with the source gone it still runs only the missing groups."""
+    src = str(tmp_path_factory.mktemp("src_gone") / "t.parquet")
+    shutil.copytree(transcripts_path, src)
+    out = str(tmp_path_factory.mktemp("out_staged"))
+    s1 = run_with_checkpoints(
+        spark, src, out, run_id="rsg", n_groups=N_GROUPS, fail_after_groups=2
+    )
+    assert s1.get("killed") and s1["groups_run"] == 2
+    shutil.rmtree(src)
+    s2 = run_with_checkpoints(spark, src, out, run_id="rsg", n_groups=N_GROUPS)
+    assert s2 == {"groups_run": N_GROUPS - 2, "groups_skipped": 2}
+    got = read_extracted(spark, out, N_GROUPS)
+    n = spark.read.parquet(transcripts_path).count()
+    assert got.count() == n
+    assert got.select("conv_id", "turn_idx").distinct().count() == n
+
+
+def test_read_extracted_with_no_committed_group_is_empty(spark, tmp_path_factory):
+    """An output with no committed group reads as an empty frame with the
+    declared schema, not a schema-inference error."""
+    got = read_extracted(spark, str(tmp_path_factory.mktemp("out_none")), 2)
+    assert got.schema == EXTRACTED_SCHEMA
+    assert got.count() == 0
